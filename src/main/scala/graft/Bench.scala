@@ -329,20 +329,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; ~130 queries ×
-      // several codegen units each evict EVERYTHING between passes, so
-      // every pass re-runs Janino on every query (measured: q23 1.6→6.8 s,
-      // q91 1.6→6.6 s as the query count crossed the cache size — compile
-      // time, not execution). Static conf: must be set before the session.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // Materialize through the noop sink, NOT count(): under count() the
     // optimizer prunes every output column and can eliminate whole joins
@@ -362,9 +349,13 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadBefore = load1()
 
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-    }
+    // warm-up and timed failures by qNN; a later failure replaces an earlier
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    def attempt(name: String)(df: => org.apache.spark.sql.DataFrame): Boolean =
+      try { run(df); true }
+      catch { case e: Throwable => failed(name.takeWhile(_ != '_')) = e; false }
+
+    SparkEntry.queries.foreach { case (name, fn) => attempt(name)(fn(spark, warmDir)) }
 
     // MEDIAN-of-3 per query: three straight driver rounds ran under load
     // (r12: load1 4.85) and best-of-2 cannot reject a contended sample —
@@ -373,12 +364,12 @@ object Bench {
     // median discards one arbitrarily-bad outlier per query, so a
     // transient load spike hits ONE pass's sample and vanishes from the
     // reported number instead of contaminating it. A failing query
-    // reports -1 (unmistakable), not its elapsed.
+    // reports -1 (unmistakable), not its elapsed; its exception goes to
+    // "failed" in target/bench.json.
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      if (attempt(name)(fn(spark, sfDir))) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     // CPU-time split across the timed passes from /proc/stat (Linux; -1
     // elsewhere): steal_pct exposes hypervisor contention loadavg cannot
@@ -542,7 +533,8 @@ object Bench {
         .mkString("{", ",", "}")
     }
     val fileLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"seg_canary_norm_median3_remeasure",""" +
-      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":$memoBuildsJson,$meta}"""
+      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":$memoBuildsJson,""" +
+      s""""failed":${Json.failures(failed)},$meta}"""
     try {
       val dir = java.nio.file.Paths.get("target")
       java.nio.file.Files.createDirectories(dir)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Mimics the driver's smoke check: SparkEntry.entry(spark) must return >0
   * rows on sf0.001 under a plain session (no graft-side session configs).
+  * It makes that plain session itself on purpose, not through
+  * [[Sessions.local]], whose graft settings the mimicked session lacks.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {

@@ -180,11 +180,92 @@ object Dedup {
     * A~B, B~C collapses into ONE keep-one group even when A~C was never
     * emitted as a pair.
     *
-    * Algorithm: graphs whose MEASURED edge count is tiny (≤1M rows) are
-    * solved exactly by one single-task union-find pass — see the gate in the
-    * body; everything larger runs iterative min-label propagation — TWO
-    * neighbor hops plus one
-    * pointer jump (label(n) ← label(label(n))) per round, so convergence is
+    * Two solvers, chosen by the MEASURED edge count (a cheap cached scan;
+    * the count is the first action and materializes the edge cache):
+    * graphs of at most ~1M edges (≲ tens of MB) are solved exactly by one
+    * single-task union-find pass ([[unionFindComponents]], one job); larger
+    * ones run the label-propagation rounds of [[roundComponents]], the
+    * deployment-scale shape. On a tiny graph the rounds cost scheduling,
+    * not work: q123's 336 edges took 81 jobs, and ~1.5 s even with every
+    * round single-task (r22). The threshold derives the algorithm from the
+    * input size, not from a local-mode constant; the rejected alternatives
+    * are in OPTIMIZATION_r22.md #8 and #10.
+    *
+    * Returns (node, canonical_id) for every node that appears in `pairs`;
+    * nodes with no pairs are absent (handle via `dedupGroups`' left join).
+    */
+  def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
+                          idBCol: String = "id_b", maxIter: Int = 50): DataFrame = {
+    val edges = edgeList(pairs, idACol, idBCol)
+    val confN = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    if (confN > 1 && edges.count() <= 1000000L) unionFindComponents(edges, maxIter)
+    else roundComponents(edges, maxIter)
+  }
+
+  /** Both orientations of every pair as (src, dst) longs, persisted and
+    * partitioned on dst. Both solvers below take ownership and unpersist. */
+  private[operators] def edgeList(pairs: DataFrame, idACol: String, idBCol: String): DataFrame =
+    // both orientations via ONE explode, not a self-union: the pairs plan
+    // (often an expensive candidate join) is evaluated once, not twice,
+    // when the persist below first materializes
+    // persisted PRE-PARTITIONED on dst, the key every round joins on: the
+    // cached data then already has hashpartitioning(dst) and the per-round
+    // join re-shuffles only the labels side (|V| rows), never the edge list
+    // (|E| rows — the dominant movement on a dense near-dup graph)
+    pairs
+      .select(explode(array(
+        struct(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")),
+        struct(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The tiny-graph solver: one union-find task over [[edgeList]]'s edges. */
+  private[operators] def unionFindComponents(edges: DataFrame, maxIter: Int): DataFrame = {
+    // zero allowed rounds cannot converge under any algorithm — keep the
+    // maxIter contract (partial labels must never be returned silently)
+    if (maxIter < 1)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within $maxIter rounds")
+    val sess = edges.sparkSession
+    import sess.implicits._
+    // min-root union-find with path compression: every union hangs the
+    // larger root under the smaller, so each tree's root is its
+    // component's min id throughout — the same fixpoint the label rounds
+    // reach (DedupSpec pins union-find ≡ rounds on the chain+path graph).
+    // coalesce(1) merges the cached edge partitions into one task with
+    // no shuffle; ≤1M edges ⇒ ≤2M LongMap entries, a few tens of MB.
+    val solved = edges.coalesce(1).as[(Long, Long)]
+      .mapPartitions { it =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x0: Long): Long = {
+          var r = x0
+          while (parent(r) != r) r = parent(r)
+          var y = x0
+          while (y != r) { val nxt = parent(y); parent(y) = r; y = nxt }
+          r
+        }
+        it.foreach { case (a, b) =>
+          if (!parent.contains(a)) parent(a) = a
+          if (!parent.contains(b)) parent(b) = b
+          val ra = find(a); val rb = find(b)
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        parent.keys.toArray.iterator.map(k => (k, find(k)))
+      }
+      .toDF("node", "lbl")
+    graft.PlanDump.dumpIfEnabled(solved, "ccTinySolve")
+    // EAGER checkpoint: the solve must run while the edge cache is hot —
+    // a lazy cut materialized after unpersist would re-execute the
+    // (often expensive) candidate-pair plan
+    val out = solved.localCheckpoint(eager = true)
+    edges.unpersist(blocking = false)
+    out.select(col("node"), col("lbl").as("canonical_id"))
+  }
+
+  /** The deployment-scale solver over [[edgeList]]'s edges:
+    * iterative min-label propagation — TWO neighbor hops plus one pointer
+    * jump (label(n) ← label(label(n))) per round, so convergence is
     * O(log diameter) rounds, not O(diameter) — near-dup graphs are mostly
     * tiny cliques plus the occasional long chain, and the jump step is what
     * keeps the chain case from serializing the whole job. Each round is
@@ -211,26 +292,8 @@ object Dedup {
     * Convergence detection: labels only ever decrease, so the label sum
     * (decimal — an ANSI long sum can overflow) is strictly monotone until
     * fixpoint; equal checksum ⇒ no label moved ⇒ done.
-    *
-    * Returns (node, canonical_id) for every node that appears in `pairs`;
-    * nodes with no pairs are absent (handle via `dedupGroups`' left join).
     */
-  def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
-                          idBCol: String = "id_b", maxIter: Int = 50): DataFrame = {
-    // both orientations via ONE explode, not a self-union: the pairs plan
-    // (often an expensive candidate join) is evaluated once, not twice,
-    // when the persist below first materializes
-    // persisted PRE-PARTITIONED on dst, the key every round joins on: the
-    // cached data then already has hashpartitioning(dst) and the per-round
-    // join re-shuffles only the labels side (|V| rows), never the edge list
-    // (|E| rows — the dominant movement on a dense near-dup graph)
-    val edges = pairs
-      .select(explode(array(
-        struct(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")),
-        struct(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private[operators] def roundComponents(edges: DataFrame, maxIter: Int): DataFrame = {
     // coalesce(0): an EMPTY pair set must mean "no components", not an NPE —
     // sum over zero rows is NULL and the convergence compare would blow up
     def checksumOf(labels: DataFrame) =
@@ -245,72 +308,6 @@ object Dedup {
         case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
         case _ => None
       }
-    // TINY-GRAPH mode (r22): every per-round stage otherwise inherits the
-    // session-default partition layout (the edge cache + the label
-    // checkpoints) even when the graph is a few hundred rows, so a round
-    // costs ~4 stages × N-tasks of pure task scheduling at high core
-    // counts (q123 ran 81 jobs on 336 edge rows, and the 8-core driver
-    // bench beat the 32-core one across the whole CC family). When the
-    // MEASURED edge count — a cheap cached scan; the count below is the
-    // loop's first action and materializes the cache — is at most ~1M rows
-    // (≲ tens of MB), the whole iterative loop is the wrong algorithm: a
-    // graph that small is solved EXACTLY by one single-task union-find
-    // pass (one job), where even single-task ROUNDS still paid one
-    // checkpoint-materialize + checksum-collect job and its driver
-    // planning gap per round (measured: the round mode left q123's CC at
-    // ~1.5 s on 336 edges — pure per-round scheduling). Above the
-    // threshold NOTHING changes (no second cache, no re-shuffle, no
-    // closure in the hot path — the deployment-scale shape is exactly the
-    // r21 code), so this is the guide-§2 "derive partitioning from input
-    // size" rule, not a local-mode constant. Variants kept for CcProbe
-    // A/Bs: "a" = session-default rounds everywhere, "b" = the r22
-    // single-partition round mode (rejected variants of WHICH are
-    // documented in OPTIMIZATION_r22.md #8), default = union-find solve.
-    val variant = sys.env.getOrElse("GRAFT_CC_VARIANT",
-      sys.props.getOrElse("graft.cc.variant", "c"))
-    val confN = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val tinyGraph = variant != "a" && confN > 1 && edges.count() <= 1000000L
-    if (tinyGraph && variant != "b") {
-      // zero allowed rounds cannot converge under any algorithm — keep the
-      // maxIter contract (partial labels must never be returned silently)
-      if (maxIter < 1)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge within $maxIter rounds")
-      val sess = pairs.sparkSession
-      import sess.implicits._
-      // min-root union-find with path compression: every union hangs the
-      // larger root under the smaller, so each tree's root is its
-      // component's min id throughout — the same fixpoint the label rounds
-      // reach (DedupSpec pins tiny ≡ default on the chain+path graph).
-      // coalesce(1) merges the cached edge partitions into one task with
-      // no shuffle; ≤1M edges ⇒ ≤2M LongMap entries, a few tens of MB.
-      val solved = edges.coalesce(1).as[(Long, Long)]
-        .mapPartitions { it =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x0: Long): Long = {
-            var r = x0
-            while (parent(r) != r) r = parent(r)
-            var y = x0
-            while (y != r) { val nxt = parent(y); parent(y) = r; y = nxt }
-            r
-          }
-          it.foreach { case (a, b) =>
-            if (!parent.contains(a)) parent(a) = a
-            if (!parent.contains(b)) parent(b) = b
-            val ra = find(a); val rb = find(b)
-            if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-          }
-          parent.keys.toArray.iterator.map(k => (k, find(k)))
-        }
-        .toDF("node", "lbl")
-      graft.PlanDump.dumpIfEnabled(solved, "ccTinySolve")
-      // EAGER checkpoint: the solve must run while the edge cache is hot —
-      // a lazy cut materialized after unpersist would re-execute the
-      // (often expensive) candidate-pair plan
-      val out = solved.localCheckpoint(eager = true)
-      edges.unpersist(blocking = false)
-      return out.select(col("node"), col("lbl").as("canonical_id"))
-    }
     // LAZY checkpoint: the checksum action right after both materializes the
     // round's labels AND reads the convergence signal in ONE job, instead of
     // an eager-checkpoint job followed by a checksum job per round
@@ -320,15 +317,11 @@ object Dedup {
     var checksum = checksumOf(labels)
     var converged = false
     var iter = 0
-    val roundEdges =
-      if (tinyGraph)
-        edges.repartition(1, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-      else edges
     // one neighbor hop: min label over neighbors (both orientations are in
     // `edges` and every node is a src, so the groupBy covers every node and
     // the self term is subsumed — see the monotonicity note above)
     def hop(lbls: DataFrame): DataFrame =
-      roundEdges.join(lbls.select(col("node").as("dst"), col("lbl")), "dst")
+      edges.join(lbls.select(col("node").as("dst"), col("lbl")), "dst")
         .groupBy("src").agg(min(col("lbl")).as("lbl"))
         .select(col("src").as("node"), col("lbl"))
     // label-of-label (pointer jump); labels are always existing node ids,
@@ -352,7 +345,6 @@ object Dedup {
       labels = next
       iter += 1
     }
-    if (!(roundEdges eq edges)) roundEdges.unpersist()
     edges.unpersist()
     if (!converged)
       // with pointer jumping, maxIter=50 covers diameters beyond any real

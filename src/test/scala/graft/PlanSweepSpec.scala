@@ -9,7 +9,7 @@ package graft
   *      allowlist of DOCUMENTED bounded uses.
   *   2. Shuffle budget: each query's STATIC initial-plan exchange count is
   *      pinned as an upper bound (captured via
-  *      `SPARK_GRAFT_PLAN_ONLY=1 runMain graft.PlanAudit`). A refactor that
+  *      `runMain graft.Probe plans <sfDir>`). A refactor that
   *      silently adds a shuffle — an un-broadcast dim, a lost partitioning,
   *      a stray repartition — fails here instead of shipping a regression
   *      the bench may not attribute. Counts are pre-AQE and deterministic;

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -128,19 +129,17 @@ class DedupSpec extends SparkSpec {
     assert(cc.size == 15, "exactly the nodes appearing in pairs")
   }
 
-  test("connected components: tiny-graph round mode matches the default shape") {
-    // r22: graphs ≤ 1M edges re-bucket the edge cache to one partition so
-    // rounds run single-task; the labeling must be identical to the
-    // session-default fan-out (partitioning never changes min-label math)
+  test("connected components: tiny-graph union-find matches the round loop") {
+    // graphs ≤ 1M edges are solved by one union-find task instead of the
+    // label rounds; both must reach the same min-id labeling
     val chain = (10L until 19L).map(i => (i, i + 1))
     val pairs = (Seq((1L, 2L), (2L, 3L), (7L, 6L)) ++ chain).toDF("id_a", "id_b")
-    def labelsWith(variant: String): Map[Long, Long] = {
-      System.setProperty("graft.cc.variant", variant)
-      try Dedup.connectedComponents(pairs).collect()
+    def labels(solve: (DataFrame, Int) => DataFrame): Map[Long, Long] =
+      solve(Dedup.edgeList(pairs, "id_a", "id_b"), 50).collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("canonical_id")).toMap
-      finally System.clearProperty("graft.cc.variant")
-    }
-    assert(labelsWith("c") == labelsWith("a"))
+    val tiny = labels(Dedup.unionFindComponents)
+    assert(tiny == labels(Dedup.roundComponents))
+    assert(tiny.size == 15 && tiny(19L) == 10L, s"the fixture's components: $tiny")
   }
 
   test("connected components raise instead of returning partial labels at maxIter") {

@@ -524,16 +524,17 @@ object Bench {
     // memo consumers are WARM serving costs; this field records what each
     // session-scoped fit-once memo's build cost once at the timed dir (the
     // last build recorded per label — warmup-dir builds precede the timed
-    // passes), so the headline stays reconcilable with a cold deployment.
+    // passes), so the headline stays reconcilable with a cold deployment;
+    // memo_rebuilds counts rebuilds after lost checkpoint blocks.
     // File-only: the stdout driver-contract line is unchanged.
-    val memoBuildsJson = {
+    def memoJson[V](m: java.util.concurrent.ConcurrentHashMap[String, V])(f: V => String) = {
       import scala.jdk.CollectionConverters._
-      SessionMemo.buildSeconds.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      m.asScala.toSeq.sortBy(_._1).map { case (k, v) => Json.str(k) + ":" + f(v) }
         .mkString("{", ",", "}")
     }
     val fileLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"seg_canary_norm_median3_remeasure",""" +
-      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":$memoBuildsJson,""" +
+      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":${memoJson(SessionMemo.buildSeconds)(fmt(_))},""" +
+      s""""memo_rebuilds":${memoJson(SessionMemo.rebuilds)(_.toString)},""" +
       s""""failed":${Json.failures(failed)},$meta}"""
     try {
       val dir = java.nio.file.Paths.get("target")

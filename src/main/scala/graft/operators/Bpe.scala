@@ -80,11 +80,6 @@ object Bpe {
     * discipline). Returns the merge table in rank order. */
   def learnMerges(vocab: DataFrame, n: Int): Seq[(Int, String, String, Long)] = {
     require(n >= 1, "need at least one merge round")
-    def ckRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-        case _ => None
-      }
     var seqs = vocab.select(col("freq"), toSeq(col("word")).as("seq")).localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (i <- 1 to n) {
@@ -97,10 +92,10 @@ object Bpe {
       merges += ((i, pair, pair.replace(" ", ""), best.head.getLong(1)))
       val next = seqs.select(col("freq"), applyMerge(col("seq"), pair).as("seq"))
         .localCheckpoint()
-      ckRdd(seqs).foreach(_.unpersist(blocking = false))
+      graft.SessionMemo.freeCheckpoint(seqs)
       seqs = next
     }
-    ckRdd(seqs).foreach(_.unpersist(blocking = false))
+    graft.SessionMemo.freeCheckpoint(seqs)
     merges.result()
   }
 

@@ -299,15 +299,6 @@ object Dedup {
     def checksumOf(labels: DataFrame) =
       labels.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO))).collect().head.getDecimal(0)
-    // a localCheckpointed plan is backed by a persisted RDD; once the NEXT
-    // round's checkpoint has materialized the prior round's blocks are dead
-    // weight — free them, or block-manager storage grows linearly with
-    // rounds on long-diameter graphs
-    def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-        case _ => None
-      }
     // LAZY checkpoint: the checksum action right after both materializes the
     // round's labels AND reads the convergence signal in ONE job, instead of
     // an eager-checkpoint job followed by a checksum job per round
@@ -341,7 +332,10 @@ object Dedup {
       val nextSum = checksumOf(next)
       converged = nextSum.compareTo(checksum) == 0
       checksum = nextSum
-      checkpointRdd(labels).foreach(_.unpersist(blocking = false))
+      // once the NEXT round's checkpoint has materialized the prior round's
+      // blocks are dead weight — free them, or block-manager storage grows
+      // linearly with rounds on long-diameter graphs
+      graft.SessionMemo.freeCheckpoint(labels)
       labels = next
       iter += 1
     }

@@ -121,33 +121,15 @@ object Graph {
         count(when(col("has_out").isNull, 1)).as("n_dangling"),
         count(when(col("has_in").isNull, 1)).as("n_no_in"))
       .collect().head
-    // ONE persisted materialization of the edge relation, PRE-PARTITIONED
-    // AND PRE-SORTED on the (src_t, src) key every round joins on (r22,
-    // VERDICT item 1 — the q136/q162 plan showed an
-    // `Exchange hashpartitioning(src_t, src)` + Sort over the cached RDD
-    // in EVERY round: the localCheckpoint had NOT preserved a partitioning
-    // the round joins could reuse, so each of the 5/3 rounds re-shuffled
-    // and re-sorted the |E|-sized relation). persist() rather than
-    // localCheckpoint, the [[Dedup.connectedComponents]] mechanism: an
-    // InMemoryRelation reliably reports the cached plan's partitioning and
-    // ordering (a lazily-checkpointed LogicalRDD drops both under AQE —
-    // verified in this round's before/after plans), so every round's
-    // sort-merge join reuses ONE exchange+sort of |E| for the whole query
-    // and re-shuffles only the node-sized rank relation (guide §2.4:
-    // remove shuffles outright). canChangeCachedPlanOutputPartitioning
-    // stays at its false default — AQE must not re-coalesce the cached
-    // layout (measured catastrophic on the CC loop in r21). The persist is
-    // session-scoped serving state like the memo holding it; storage is
-    // MEMORY_AND_DISK so an |E| beyond executor memory spills instead of
-    // evicting the working set.
-    // N must be EXACTLY the session's shuffle partitions (the deployment
-    // scale knob) for the reuse to fire: EnsureRequirements re-shuffles a
-    // co-partitioned child whose partition count sits BELOW
-    // conf.numShufflePartitions whenever the other join side shuffles
-    // anyway (the "reasonable parallelism" rule) — measured: a size-derived
-    // N = 5 cache was re-exchanged to 32 every round, value-identical plans
-    // but zero exchange reuse. The per-round rank side shuffles into the
-    // same N, so partition sizing stays governed by the one session knob.
+    // ONE materialization of the |E|-sized contribution relation for all
+    // rounds: edges joined with their out-degrees, repartitioned on the
+    // (src_t, src) key every round joins on into the session's shuffle
+    // partitions, sorted within partitions, and cut behind a lazy
+    // localCheckpoint. The cut does NOT carry that layout into the rounds:
+    // the checkpoint's LogicalRDD reports UnknownPartitioning(0), so every
+    // round's join still plans an Exchange over the `Scan ExistingRDD`
+    // (plans/r22/q136_after.txt) and re-shuffles |E| per round. The
+    // checkpoint still spares each round from re-running the edge join.
     val contribEdgesPlan = edgesCk.join(deg, Seq("src_t", "src"))
       .repartition(col("src_t"), col("src"))
       .sortWithinPartitions("src_t", "src")
@@ -482,12 +464,9 @@ object Graph {
     * against the graph snapshot once, not per query (r22; each q162
     * evaluation previously re-ran the semi-join, its checkpoint AND a
     * count action). */
-  private val pprSeedCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), (DataFrame, Long)]()
   private def nation1SeedsCached(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): (DataFrame, Long) =
-    graft.SessionMemo.cached(pprSeedCache, (spark, dir), "pprNation1Seeds")(_._1) { _ =>
+    graft.SessionMemo.cached(spark, "pprNation1Seeds", dir) {
       val seeds = Tables.customer(spark, dir)
         .filter(col("c_nationkey") === 1)
         .select(lit("c").as("src_t"), col("c_custkey").as("src"))
@@ -560,30 +539,24 @@ object Graph {
     * use (PipelineQueries.quantizedVecsCk): each session materializes the
     * relationship dictionary once behind a checkpoint; the per-query
     * orientation explode stays cheap and derives from the cached rows. */
-  private val tradePairsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]()
   private def tradePairs(spark: org.apache.spark.sql.SparkSession,
                          dir: String): DataFrame =
-    graft.SessionMemo.cached(tradePairsCache, (spark, dir), "tradePairs")(_._1)(_ =>
+    graft.SessionMemo.cached(spark, "tradePairs", dir) {
       Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
         .distinct()
-        .localCheckpoint(eager = false))
+        .localCheckpoint(eager = false)
+    }
 
   /** Memoized [[PrGraphBase]] of the trade graph per (session, dir) — one
     * |E|-sized materialization + structure probe shared by q136 and q162
     * (r21): each PageRank evaluation previously re-ran the four-checkpoint
     * build chain over the (already memoized) tradePairs rows. Eager by the
     * index-build contract (the structure probe is one action). */
-  private val prBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), PrGraphBase]()
   private def tradeGraphBase(spark: org.apache.spark.sql.SparkSession,
                              dir: String): PrGraphBase =
-    graft.SessionMemo.cached(prBaseCache, (spark, dir), "prGraphBase")(_._1)(
-      _ => prGraphBase(tradeEdges(spark, dir)))
+    graft.SessionMemo.cached(spark, "prGraphBase", dir)(prGraphBase(tradeEdges(spark, dir)))
 
   /** Both orientations of the [[tradePairs]] dictionary — the q136/q162
     * input graph. */
@@ -606,18 +579,15 @@ object Graph {
     * to persistent relationships, and customers fanning out to >1000
     * suppliers are dropped before pairing (the q31 stop-shingle/hub cap —
     * a single hub customer would otherwise contribute C(k,2) pairs). One
-    * row per undirected edge, s_a < s_b. */
-  private val coSupplyCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int), DataFrame]()
-  /** Memoized per (session, dir, minRepeat) behind a checkpoint: the
+    * row per undirected edge, s_a < s_b.
+    *
+    * Memoized per (session, dir, minRepeat) behind a checkpoint: the
     * projection is the expensive shared input of three graph audits
     * (q167 at ≥2; q175 and q181 at ≥3) — built once per session, served
     * from the cached rows thereafter (the [[tradePairs]] economics). */
   private def coSupplyEdges(spark: org.apache.spark.sql.SparkSession,
                             dir: String, minRepeat: Int = 2): DataFrame =
-    graft.SessionMemo.cached(coSupplyCache, (spark, dir, minRepeat),
-        s"coSupplyEdges_$minRepeat")(_._1)(_ => {
+    graft.SessionMemo.cached(spark, s"coSupplyEdges_$minRepeat", dir) {
       val p = Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
@@ -636,7 +606,7 @@ object Graph {
         .groupBy(col("a.supp").as("s_a"), col("b.supp").as("s_b"))
         .agg(count(lit(1)).as("n_sc"))
         .localCheckpoint(eager = false)
-    })
+    }
 
   /** Triangle census of the supplier co-supply graph (see
     * [[coSupplyEdges]] for the graph and its scale guards). The node set
@@ -1188,12 +1158,9 @@ object Graph {
     * checkpoint materializations), so each session runs them once and
     * every later build serves the two final score relations from cached
     * RDDs — the tradePairs/quantizedVecsCk economics. */
-  private val hitsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int), (DataFrame, DataFrame)]()
   private def hitsTradeCached(spark: org.apache.spark.sql.SparkSession,
                               dir: String, rounds: Int): (DataFrame, DataFrame) =
-    graft.SessionMemo.cached(hitsCache, (spark, dir, rounds), "hitsTrade")(_._1) { _ =>
+    graft.SessionMemo.cached(spark, "hitsTrade", (dir, rounds)) {
       val (h, a) = hits(tradePairs(spark, dir), rounds)
       (h.localCheckpoint(eager = false), a.localCheckpoint(eager = false))
     }

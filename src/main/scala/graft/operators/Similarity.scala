@@ -340,18 +340,6 @@ object Similarity {
     * top-k and the candidate-mass statistics. Returns
     * (corpusCells(neighbor_id, c_emb, cell, c_norm),
     *  qCells(query_id, q_emb, q_norm, cell) — one row per probed cell). */
-  /** Per-JVM cache of fitted coarse quantizers keyed by (corpus plan
-    * semantic hash, nLists, seed) — the documented index-build-once
-    * contract made literal: re-deriving cell assignments for the same
-    * corpus snapshot reuses the centroids instead of re-running Lloyd
-    * passes (each pass is a full scan of the embedding column at scale).
-    * The seeded fit is deterministic, so reuse is value-identical. Same
-    * immutable-snapshot assumption as Tables.schemaCache: a path rewritten
-    * with different data under the same plan needs a fresh JVM. The model
-    * itself is driver-side tiny (nLists × dim centroid doubles). */
-  private val quantizerCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Long), org.apache.spark.ml.clustering.KMeansModel]()
-
   private[operators] def ivfAssignments(queries: DataFrame, corpus: DataFrame,
                                         nLists: Int, nProbe: Int,
                                         seed: Long): (DataFrame, DataFrame) = {
@@ -366,8 +354,17 @@ object Similarity {
     // over the embedding column.
     val km = new KMeans().setK(nLists).setSeed(seed).setMaxIter(8)
       .setFeaturesCol("features").setPredictionCol("cell")
-    val model = quantizerCache.computeIfAbsent(
-      (corpus.semanticHash(), nLists, seed), _ => km.fit(v))
+    // the fitted coarse quantizer is memoized per (session, corpus plan
+    // semantic hash, nLists, seed) — the documented index-build-once
+    // contract made literal: re-deriving cell assignments for the same
+    // corpus snapshot reuses the centroids instead of re-running Lloyd
+    // passes (each pass is a full scan of the embedding column at scale).
+    // The seeded fit is deterministic, so reuse is value-identical. Same
+    // immutable-snapshot assumption as Tables.schemaCache: a path rewritten
+    // with different data under the same plan needs a fresh session. The
+    // model itself is driver-side tiny (nLists × dim centroid doubles).
+    val model = graft.SessionMemo.cached(corpus.sparkSession, "ivfQuantizer",
+      (corpus.semanticHash(), nLists, seed))(km.fit(v))
     val corpusCells = model.transform(v)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
         col("cell"), sqrt(VectorFns.normSq(col("embedding"))).as("c_norm"))
@@ -406,22 +403,19 @@ object Similarity {
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("long").as("rank"), col("col.score").as("sim"))
 
-  /** Per-JVM cache of fitted PQ codebooks keyed like [[quantizerCache]]
-    * (corpus plan semantic hash + shape + seed) — the m per-subspace
-    * k-means fits are the index build; reuse is value-identical under the
-    * same immutable-snapshot assumption. The codebook is driver-side tiny:
-    * m × ksub × subDim floats (= dims × ksub — 4 KB at 64×16). */
-  private val pqCodebookCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int, Int, Long), Array[Float]]()
-
   /** Product-quantization codebook (Jégou et al. 2011): `m` independent
     * k-means fits, one per `subDim = dims/m` subspace of the embedding,
     * `ksub` centroids each, flattened `[(j·ksub + c)·subDim + d]`. Eager
-    * by the same index-build contract as [[ivfTopK]]'s quantizer. */
+    * by the same index-build contract as [[ivfTopK]]'s quantizer, and
+    * memoized the same way: per (session, corpus plan semantic hash, shape,
+    * seed), value-identical under the same immutable-snapshot assumption.
+    * The codebook is driver-side tiny: m × ksub × subDim floats
+    * (= dims × ksub — 4 KB at 64×16). */
   def pqCodebook(corpus: DataFrame, dims: Int, m: Int, ksub: Int, seed: Long): Array[Float] = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
     val subDim = dims / m
-    pqCodebookCache.computeIfAbsent((corpus.semanticHash(), dims, m, ksub, seed), _ => {
+    graft.SessionMemo.cached(corpus.sparkSession, "pqCodebook",
+        (corpus.semanticHash(), dims, m, ksub, seed)) {
       import org.apache.spark.ml.clustering.KMeans
       val cb = new Array[Float](m * ksub * subDim)
       // one fit per subspace; each scans only its OWN dims-slice of the
@@ -449,7 +443,7 @@ object Similarity {
         }
       }
       cb
-    })
+    }
   }
 
   /** PQ/ADC approximate top-k — the memory-compression scale path that

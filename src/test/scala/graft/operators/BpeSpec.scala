@@ -20,7 +20,9 @@ class BpeSpec extends SparkSpec {
   test("learnMerges recovers the planted argmax sequence with lexicographic tie-break") {
     // 'abab' x3, 'ab' x2: round 1 pairs: (a b)=8 via abab(2)*3 + ab*2, (b a)=3
     val vocab = Seq(("abab", 3L), ("ab", 2L)).toDF("word", "freq")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val merges = Bpe.learnMerges(vocab, 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, "round checkpoints freed")
     assert(merges.head === ((1, "a b", "ab", 8L)))
     // after merging: ' ab ab ' x3 and ' ab ' x2 -> round 2: (ab ab)=3
     assert(merges(1) === ((2, "ab ab", "abab", 3L)))
